@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /**
  * Per-round benchmark main (driver contract): times every SparkEntry query
@@ -97,7 +98,7 @@ object Bench {
     val repsByQuery = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): Boolean =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       def timedOnce(): Double = {
         val t0 = System.nanoTime()
         if (once()) (System.nanoTime() - t0) / 1e9 else -1.0
@@ -110,6 +111,9 @@ object Bench {
     val results = repsByQuery.map { case (name, reps) =>
       name -> (if (reps(1) >= 0) reps.min else reps.head)
     }
+    // a run that threw is recorded as -1: name those queries, so an error is
+    // visible in the JSON line and not only missing from the total
+    val failed = repsByQuery.collect { case (name, reps) if reps.exists(_ < 0) => name }
 
     // free the dedup/pack/sim ops' persisted intermediates before the pipeline bench
     graft.ops.DedupOps.unpersistIntermediates()
@@ -147,8 +151,9 @@ object Bench {
     // (kg_pipeline_scaled_sec) so adding a new bench leg can never shift
     // the longitudinal headline again (round-4 ADVICE)
     val total = (results :+ ("kg_pipeline" -> pipeSec)).map(_._2).filter(_ >= 0).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$repsJson,"sf":"$sfDir","kg_files":$nDocs,"kg_triples":$nTriples,"kg_files_per_sec":${nDocs / pipeSec}%.1f,"kg_triples_per_sec":${nTriples / pipeSec}%.1f,"kb_size":$kbSize,"kg_pipeline_scaled_sec":$scaledSec%.3f,"kg_scaled_files":$scaledDocs,"kg_scaled_triples":$scaledTriples,"kg_scaled_files_per_sec":${scaledDocs / scaledSec}%.1f,"kg_scaled_triples_per_sec":${scaledTriples / scaledSec}%.1f,"cores":$cpus}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$repsJson,"sf":"$sfDir","kg_files":$nDocs,"kg_triples":$nTriples,"kg_files_per_sec":${nDocs / pipeSec}%.1f,"kg_triples_per_sec":${nTriples / pipeSec}%.1f,"kb_size":$kbSize,"kg_pipeline_scaled_sec":$scaledSec%.3f,"kg_scaled_files":$scaledDocs,"kg_scaled_triples":$scaledTriples,"kg_scaled_files_per_sec":${scaledDocs / scaledSec}%.1f,"kg_scaled_triples_per_sec":${scaledTriples / scaledSec}%.1f,"cores":$cpus,"failed":$failedJson}"""
     // the one machine-readable line goes to stdout AND its own file: the
     // round-4 driver's log-tail capture truncated it (the reps object
     // roughly doubled its length) and recorded "parsed": null — a sidecar
@@ -159,7 +164,7 @@ object Bench {
     val sidecar = sys.env.getOrElse("GRAFT_BENCH_JSON", "/root/repo/bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       (line + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(_) => () } // stdout already carries it
+    catch { case NonFatal(_) => () } // stdout already carries it
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -33,7 +33,21 @@ object Materialize {
   }
 
   /**
-   * Per-(lang,bucket) lineage rows: row count + sha256 of the sorted row set.
+   * Per-(lang,bucket) lineage rows of any frame: `df` is bucketed,
+   * hash-partitioned on exactly (lang, bucket) and handed to [[digest]].
+   * [[writeStage]] skips the repartition: it digests the partitions it has
+   * just written.
+   */
+  def lineage(df: DataFrame, stage: String, buckets: Int = DefaultBuckets,
+      sortCols: Seq[String] = tripleOrder): DataFrame =
+    digest(withBucket(df, buckets).repartition(col("lang"), col("bucket")), stage, sortCols)
+
+  /**
+   * Lineage of a frame that carries `lang` and `bucket` and is already
+   * hash-partitioned on them: per (lang, bucket) its row count, the sha256
+   * of its sorted row set and its input-file count. Only local sorts run.
+   * Computed eagerly — at most buckets × langs rows — and returned as a
+   * local frame.
    *
    * STREAMING digest: rows are hash-partitioned on exactly (lang, bucket) —
    * so every row of a group lands in one partition — sorted within the
@@ -44,10 +58,19 @@ object Materialize {
    * are identical to sha2(concat_ws("\n", sort_array(collect_list(r)))) —
    * rows joined by '\n' in binary UTF8 order — which LineageDigestSpec pins
    * against the legacy aggregate formulation at fixture scale.
+   *
+   * north_star lineage contract: "(partition id, input file count, triple
+   * count, sha256)" — the input-file count is the number of distinct
+   * non-null `docId`s of the group (null without a `docId` column), counted
+   * the same streaming way over a local sort by (lang, bucket, docId). Both
+   * folds run in one job with no exchange; their rows are merged here.
+   *
+   * @throws IllegalStateException when a (lang, bucket) group comes out of
+   * more than one partition — the plan contract the streaming folds rest on
    */
-  def lineage(df: DataFrame, stage: String, buckets: Int = DefaultBuckets,
-      sortCols: Seq[String] = tripleOrder): DataFrame = {
-    val spark = df.sparkSession
+  private[pipeline] def digest(keyed: DataFrame, stage: String,
+      sortCols: Seq[String]): DataFrame = {
+    val spark = keyed.sparkSession
     import spark.implicits._
     // explicit NULL sentinel: bare concat_ws SKIPS null fields, so rows
     // differing only in null position — (a, NULL, b) vs (a, b, NULL) — or
@@ -57,52 +80,58 @@ object Materialize {
     // (LineageDigestSpec still pins the legacy-aggregate equality).
     val rowStr = concat_ws("\u0001",
       sortCols.map(c => coalesce(col(c).cast("string"), lit("\u0000NUL"))): _*)
-    val keyed = withBucket(df, buckets)
-      .select(col("lang"), col("bucket").cast("int").as("bucket"), rowStr.as("r"))
-      .repartition(col("lang"), col("bucket"))
-      .sortWithinPartitions(col("lang"), col("bucket"), col("r"))
+    // per group, in `v` order: (lang, bucket, row count, sha256 hex) when
+    // `sha`, else (lang, bucket, distinct non-null values, null)
+    def fold(v: Column, sha: Boolean): Dataset[(String, Int, Long, String)] = keyed
+      .select(col("lang"), col("bucket"), v.as("v"))
+      .sortWithinPartitions(col("lang"), col("bucket"), col("v"))
       .as[(String, Int, String)]
-    keyed.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer[(String, Int, Long, String)]()
-      var curLang: String = null
-      var curBucket: Int = 0
-      var md: java.security.MessageDigest = null
-      var n = 0L
-      var open = false
-      def flush(): Unit = if (open) {
-        out += ((curLang, curBucket, n, md.digest().map(b => f"${b & 0xff}%02x").mkString))
-      }
-      it.foreach { case (lang, bucket, r) =>
-        if (!open || lang != curLang || bucket != curBucket) {
-          flush()
-          curLang = lang; curBucket = bucket; open = true
-          md = java.security.MessageDigest.getInstance("SHA-256")
-          n = 0L
+      .mapPartitions { it =>
+        val out = scala.collection.mutable.ArrayBuffer[(String, Int, Long, String)]()
+        var curLang: String = null
+        var curBucket: Int = 0
+        var md: java.security.MessageDigest = null
+        var last: String = null
+        var n = 0L
+        var open = false
+        def flush(): Unit = if (open) {
+          out += ((curLang, curBucket, n,
+            if (sha) md.digest().map(b => f"${b & 0xff}%02x").mkString else null))
         }
-        if (n > 0) md.update('\n'.toByte)
-        md.update(r.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        n += 1
+        it.foreach { case (lang, bucket, v) =>
+          if (!open || lang != curLang || bucket != curBucket) {
+            flush()
+            curLang = lang; curBucket = bucket; open = true
+            md = if (sha) java.security.MessageDigest.getInstance("SHA-256") else null
+            last = null
+            n = 0L
+          }
+          if (sha) {
+            if (n > 0) md.update('\n'.toByte)
+            md.update(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            n += 1
+          } else if (v != null && v != last) { last = v; n += 1 }
+        }
+        flush()
+        out.iterator
       }
-      flush()
-      out.iterator
-    }.toDF("lang", "bucket", "rowCount", "sha256")
-      .withColumn("stage", lit(stage))
-      .transform(addInputFiles(df, buckets))
+    val hasDocs = keyed.columns.contains("docId")
+    val shas = fold(rowStr, sha = true)
+    val folds =
+      if (hasDocs) shas.union(fold(col("docId").cast("string"), sha = false)).collect()
+      else shas.collect()
+    def byGroup(rows: Array[(String, Int, Long, String)]) =
+      rows.groupBy(r => (r._1, r._2)).map {
+        case (key, Array(r)) => key -> r
+        case (key, _) => throw new IllegalStateException(
+          s"stage $stage: (lang, bucket) $key came out of more than one partition")
+      }
+    val (digests, files) = folds.partition(_._4 != null)
+    val inputFiles = byGroup(files)
+    byGroup(digests).toSeq.map { case (key, (lang, bucket, n, sha)) =>
+      (lang, bucket, n, sha, stage, inputFiles.get(key).map(_._3))
+    }.toDF("lang", "bucket", "rowCount", "sha256", "stage", "inputFiles")
   }
-
-  /** north_star lineage contract: "(partition id, input file count, triple
-   * count, sha256)" — the input-file count per (lang, bucket) is the number
-   * of distinct source documents feeding the partition. A separate exact
-   * countDistinct aggregate (map-side partials, constant state per group)
-   * joined onto the digest rows — the digest pass itself stays single-pass. */
-  private def addInputFiles(df: DataFrame, buckets: Int)(lineage: DataFrame): DataFrame =
-    if (!df.columns.contains("docId")) lineage.withColumn("inputFiles", lit(null).cast("long"))
-    else {
-      val files = withBucket(df, buckets)
-        .groupBy(col("lang"), col("bucket").cast("int").as("bucket"))
-        .agg(countDistinct(col("docId")).as("inputFiles"))
-      lineage.join(files, Seq("lang", "bucket"), "left")
-    }
 
   def completeMarker(dir: String): java.nio.file.Path = Paths.get(dir, "_GRAFT_COMPLETE")
 
@@ -112,6 +141,17 @@ object Materialize {
    * Write a stage output + lineage atomically enough for resume: data and
    * lineage first, the completion marker last. `resume = true` skips the
    * write when the marker exists (stage-granular restart).
+   *
+   * Single pass: the bucketed frame is built and persisted once; the parquet
+   * write consumes it and the lineage is digested from the SAME persisted
+   * partitions, so the stage plan executes once and nothing is read back
+   * from disk. The rows digested are the rows written — the writer's one
+   * rewrite, an empty partition string to NULL (`__HIVE_DEFAULT_PARTITION__`),
+   * is applied up front — and WrittenLineageSpec pins the lineage against a
+   * digest of the files on disk. An empty stage yields an empty lineage.
+   *
+   * @throws IllegalStateException from [[digest]] when a (lang, bucket)
+   * group came out of more than one partition
    */
   def writeStage(df: DataFrame, stage: String, outDir: String,
       buckets: Int = DefaultBuckets, resume: Boolean = true,
@@ -125,30 +165,18 @@ object Materialize {
     // With the prefix satisfied, no extra sort runs and file content order
     // IS the canonical order, making the data files deterministic.
     val bucketed = withBucket(df, buckets)
+      .withColumn("lang", nullif(col("lang"), lit("")))
       .repartition(col("lang"), col("bucket"))
       .sortWithinPartitions((Seq("lang", "bucket") ++ sortCols).map(col): _*)
-    bucketed.write.mode(SaveMode.Overwrite)
-      .partitionBy("lang", "bucket")
-      .parquet(s"$dir/data")
-    // lineage from the JUST-WRITTEN files, not the logical plan: the digest
-    // then describes what is actually on disk, and the stage plan executes
-    // ONCE (previously the data write, the digest pass, and the input-file
-    // aggregate each re-ran the full upstream plan — 3x stage cost on an
-    // unpersisted frame). An EMPTY stage writes no parquet part files
-    // (schema inference would fail on the bare directory) — fall back to
-    // the original frame there; its lineage is empty either way.
-    val dataPath = new org.apache.hadoop.fs.Path(s"$dir/data")
-    val fs = dataPath.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val hasFiles = {
-      val it = fs.listFiles(dataPath, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
-    val written = if (hasFiles) df.sparkSession.read.parquet(s"$dir/data") else df
-    lineage(written, stage, buckets, sortCols)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).json(s"$dir/lineage")
+      .persist()
+    try {
+      bucketed.write.mode(SaveMode.Overwrite)
+        .partitionBy("lang", "bucket")
+        .parquet(s"$dir/data")
+      digest(bucketed, stage, sortCols)
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).json(s"$dir/lineage")
+    } finally bucketed.unpersist(false)
     Files.createDirectories(Paths.get(dir))
     Files.write(completeMarker(dir), java.util.Arrays.asList(stage))
     true

@@ -88,6 +88,21 @@ final case class KbDims(
     // the same executor-resident copy. None = broadcast buildGazetteer().
     gazetteerBroadcast: Option[org.apache.spark.broadcast.Broadcast[Gazetteer]] = None)
 
+/** A session cache of build-once artifacts: `apply` builds the value of an
+ * absent key exactly once even when callers race — the others wait for that
+ * build instead of running their own, whose broadcasts and checkpoints would
+ * leak. A build that throws leaves the key to be built by the next caller. */
+private[pipeline] final class OncePerKey[K, V] {
+  private final class Cell(build: => V) { lazy val value: V = build }
+  private val cells = scala.collection.concurrent.TrieMap.empty[K, Cell]
+
+  // TrieMap.getOrElseUpdate is atomic: a losing caller's Cell is dropped unbuilt
+  def apply(key: K)(build: => V): V = cells.getOrElseUpdate(key, new Cell(build)).value
+
+  /** Drop the entries whose key fails `keep`. */
+  def retain(keep: K => Boolean): Unit = cells.filterInPlace { case (k, _) => keep(k) }
+}
+
 object KbDims {
 
   /** Session cache of the toy KB's build-once artifacts (canonical map,
@@ -97,24 +112,22 @@ object KbDims {
    * so rebuilding the CC loop and the per-alias argmax inside every
    * `Pipeline.run` was fixed serial cost per run. Keyed by applicationId so
    * artifacts from a stopped context are never served. */
-  private val defaultCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame,
-      org.apache.spark.broadcast.Broadcast[Gazetteer])]
+  private val defaultCache = new OncePerKey[(String, String), (org.apache.spark.sql.DataFrame,
+    org.apache.spark.sql.DataFrame, org.apache.spark.broadcast.Broadcast[Gazetteer])]
 
   def default(spark: SparkSession, language: String): KbDims = {
     val key = (spark.sparkContext.applicationId, language)
     val labels = KB.labelsForLang(spark, language)
     val dbpedia = KB.dbpedia(spark)
     val lookup = KB.dbpediaLookup(spark)
-    val (canon, link, gazBc) = defaultCache.getOrElseUpdate(key, {
-      defaultCache.filterInPlace { case ((app, _), _) => app == key._1 }
+    val (canon, link, gazBc) = defaultCache(key) {
+      defaultCache.retain { case (app, _) => app == key._1 }
       val c = Canonicalize.canonicalMapFromKb(labels, dbpedia, Some(lookup))
         .localCheckpoint(true)
       val bp = Link.bestPerAlias(labels).localCheckpoint(true)
       val g = spark.sparkContext.broadcast(Gazetteer.fromKb(language))
       (c, bp, g)
-    })
+    }
     KbDims(
       labels = labels,
       wikidata = KB.wikidata(spark),

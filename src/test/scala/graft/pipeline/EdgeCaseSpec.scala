@@ -40,4 +40,20 @@ class EdgeCaseSpec extends AnyFunSuite {
     // the manifest still accounts for every input row (including empty content)
     assert(Corpus.manifest(corpus).count() == 2)
   }
+
+  test("an empty stage writes an empty lineage and its completion marker, then resumes") {
+    val empty = Seq.empty[(String, String, String, String, String, String)]
+      .toDF("docId", "lang", "subjectId", "predicate", "objectId", "inferred")
+    val out = java.nio.file.Files.createTempDirectory("graft-empty-stage").toString
+    assert(Materialize.writeStage(empty, "canonical", out))
+    assert(Materialize.isComplete(s"$out/canonical"))
+    val lineage = java.nio.file.Paths.get(out, "canonical", "lineage")
+    val files = java.nio.file.Files.list(lineage)
+    val lines = try files.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".json"))
+        .map(p => java.nio.file.Files.readAllLines(p).size).sum
+      finally files.close()
+    assert(lines == 0)
+    assert(!Materialize.writeStage(empty, "canonical", out, resume = true))
+  }
 }

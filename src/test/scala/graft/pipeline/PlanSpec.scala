@@ -1,7 +1,12 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
  * Physical-plan assertions: the plan properties the scale design depends on
@@ -100,15 +105,10 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  /** Read-path half of the materialization contract: writeStage lays data
-   * out as `lang=X/bucket=N` directories so per-language consumers read only
-   * their shard; this pins that a lang predicate becomes a PARTITION filter
-   * (directories skipped at planning) rather than a data filter (every file
-   * scanned then filtered) — the difference between reading 1/k and k/k of
-   * a 100 TB triple table. */
-  test("materialized stage reads prune lang partitions at the scan") {
+  /** Triple rows over four langs and seven repos. */
+  private def stageFrame(n: Int) = {
     val langs = Seq("scala", "java", "go", "python")
-    val triples = spark.range(0, 400).select(
+    spark.range(0, n).select(
       concat(lit("repo"), col("id") % 7).as("repo"),
       element_at(typedLit(langs), (col("id") % 4 + 1).cast("int")).as("lang"),
       concat(lit("Q"), col("id") % 50).as("subjectId"),
@@ -116,8 +116,17 @@ class PlanSpec extends AnyFunSuite {
       concat(lit("Q"), col("id") % 30).as("objectId"),
       lit("explicit").as("inferred"),
       col("id").as("docId"))
+  }
+
+  /** Read-path half of the materialization contract: writeStage lays data
+   * out as `lang=X/bucket=N` directories so per-language consumers read only
+   * their shard; this pins that a lang predicate becomes a PARTITION filter
+   * (directories skipped at planning) rather than a data filter (every file
+   * scanned then filtered) — the difference between reading 1/k and k/k of
+   * a 100 TB triple table. */
+  test("materialized stage reads prune lang partitions at the scan") {
     val out = java.nio.file.Files.createTempDirectory("graft-prune").toString
-    Materialize.writeStage(triples, "triples", out, buckets = 4, resume = false)
+    Materialize.writeStage(stageFrame(400), "triples", out, buckets = 4, resume = false)
 
     val all = Materialize.readStage(spark, "triples", out)
     val pruned = all.filter(col("lang") === "scala")
@@ -131,5 +140,61 @@ class PlanSpec extends AnyFunSuite {
     assert(prunedFiles * 2 <= allFiles,
       s"pruned read touched $prunedFiles of $allFiles files")
     assert(pruned.count() == 100)
+  }
+
+  /** Every node of an executed plan, through adaptive plans and query
+   * stages; a cached relation's own plan is not a child. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case o => o +: o.children.flatMap(nodes)
+  }
+
+  /** Single-pass write: the stage data is exchanged once, on (lang, bucket),
+   * and the lineage is digested from the persisted partitions the parquet
+   * writer consumed — no file of the stage is read back, and nothing
+   * re-partitions the rows below the digest's MapPartitions. */
+  test("writeStage exchanges once on (lang, bucket) and digests the persisted partitions") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-single-pass").toString
+    spark.listenerManager.register(listener)
+    try {
+      Materialize.writeStage(stageFrame(400), "triples", out, buckets = 4, resume = false)
+      // listener calls are asynchronous; the lineage write is writeStage's last query
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.toArray.exists(_.toString.contains(s"$out/triples/lineage")) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    assert(all.exists(_.toString.contains(s"$out/triples/lineage")), "lineage write not observed")
+    // the plan strings include the persisted frame's own plan
+    val text = all.map(_.toString)
+    assert(!text.exists(_.contains("FileScan")), "writeStage read files back")
+    val exchanges = text.flatMap(_.split("\n")).filter(_.contains("Exchange"))
+    val repartition = "Exchange hashpartitioning\\(lang#\\d+, bucket#\\d+, \\d+\\)".r
+    assert(exchanges.nonEmpty)
+    exchanges.foreach(e => assert(repartition.findFirstIn(e).nonEmpty, s"unexpected exchange: $e"))
+    val digests = all.flatMap(nodes).collect { case m: MapPartitionsExec => m }
+    assert(digests.nonEmpty, "no digest MapPartitions observed")
+    digests.foreach { m =>
+      val below = nodes(m)
+      assert(!below.exists(_.isInstanceOf[Exchange]), s"exchange below the digest:\n$m")
+      assert(below.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"digest not over the persisted frame:\n$m")
+    }
+  }
+
+  test("the digest fails loudly when a (lang, bucket) group spans partitions") {
+    // one group, dealt round-robin over two partitions
+    val oneGroup = stageFrame(40).withColumn("lang", lit("go")).withColumn("repo", lit("repo0"))
+    val split = Materialize.withBucket(oneGroup, buckets = 4).repartition(2)
+    val e = intercept[IllegalStateException](
+      Materialize.digest(split, "triples", Materialize.tripleOrder))
+    assert(e.getMessage.contains("more than one partition"))
   }
 }

@@ -93,3 +93,53 @@ class LineageDigestSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 }
+
+/** writeStage digests the rows it writes without reading them back; its
+ * lineage must still describe what is on disk: every stage's lineage JSON
+ * equals [[Materialize.lineage]] of the stage's files, read back. */
+class WrittenLineageSpec extends AnyFunSuite {
+  import SparkHolder.spark
+  import spark.implicits._
+  import org.apache.spark.sql.functions.sum
+
+  private val cols = Seq("lang", "bucket", "rowCount", "sha256", "inputFiles")
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.select(cols.head, cols.tail: _*).collect().map(_.toSeq.map(String.valueOf)).toSet
+
+  private def assertMatchesDisk(out: String, stage: String, sortCols: Seq[String],
+      buckets: Int = Materialize.DefaultBuckets): Unit = {
+    val recorded = rowSet(spark.read.json(s"$out/$stage/lineage"))
+    val onDisk = rowSet(Materialize.lineage(Materialize.readStage(spark, stage, out), stage,
+      buckets, sortCols))
+    assert(recorded.nonEmpty, stage)
+    assert(recorded == onDisk, stage)
+  }
+
+  test("checkpointed stages: recorded lineage equals the lineage of the files on disk") {
+    val corpus = Corpus.generate(spark, 120L, 10, 44L, 4)
+    val out = Files.createTempDirectory("graft-lineage").toString
+    Pipeline.runCheckpointed(spark, corpus, out)
+    // linked sorts by a non-string column (citationStart)
+    assertMatchesDisk(out, "linked", Seq("docId", "citationStart", "entityName"))
+    assertMatchesDisk(out, "triples", Seq("subject", "predicate", "obj", "inferred", "docId"))
+    assertMatchesDisk(out, "canonical", Materialize.tripleOrder)
+  }
+
+  test("empty lang and null fields: recorded lineage equals the lineage on disk") {
+    // the writer stores an empty partition string as NULL; a NULL field has
+    // its own sentinel in the digest
+    val rows = Seq(
+      ("r1:a", "", "Q1", "USES", "Q2", "explicit"),
+      ("r1:b", "", "Q1", "USES", null, "explicit"),
+      ("r2:a", null, "Q3", "USES", "Q4", "implicit"),
+      ("r3:a", "en", "Q5", "USES", "Q6", "explicit"),
+      ("r3:b", "en", "Q5", null, "Q6", "explicit"))
+    val df = rows.toDF("docId", "lang", "subjectId", "predicate", "objectId", "inferred")
+    val out = Files.createTempDirectory("graft-lineage-nulls").toString
+    Materialize.writeStage(df, "canonical", out, buckets = 4, resume = false)
+    assertMatchesDisk(out, "canonical", Materialize.tripleOrder, buckets = 4)
+    val recorded = spark.read.json(s"$out/canonical/lineage")
+    assert(recorded.filter($"lang".isNull).agg(sum("rowCount")).first().getLong(0) == 3)
+  }
+}

@@ -163,3 +163,45 @@ class ScaleKbSpec extends AnyFunSuite {
     assert(d1.labels eq d2.labels)
   }
 }
+
+/**
+ * The session caches of KB artifacts ([[SyntheticKb.kbDims]],
+ * [[KbDims.default]]) build once per key even when callers race: a losing
+ * concurrent build would leak its gazetteer broadcast and its checkpointed
+ * frames for the rest of the session.
+ */
+class KbDimsCacheSpec extends AnyFunSuite {
+  import SparkHolder.spark
+  import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
+  /** Persisted RDDs (the artifacts' localCheckpoints) that `f` leaves behind. */
+  private def checkpointsLeftBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.emptyRDD[Int].id
+    f
+    sc.getPersistentRDDs.keys.count(_ > before)
+  }
+
+  test("concurrent kbDims callers share one build and one gazetteer broadcast") {
+    val single = checkpointsLeftBy(SyntheticKb.kbDims(spark, 301L))
+    val threads = 4
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      var ids = Seq.empty[Long]
+      val racing = checkpointsLeftBy {
+        val calls = (1 to threads).map(_ => pool.submit(new Callable[Long] {
+          def call(): Long = {
+            start.await()
+            SyntheticKb.kbDims(spark, 300L).gazetteerBroadcast.get.id
+          }
+        }))
+        start.countDown()
+        ids = calls.map(_.get(5, TimeUnit.MINUTES))
+      }
+      assert(ids.distinct.size == 1, s"broadcast ids $ids")
+      assert(racing == single,
+        s"$threads racing callers left $racing checkpoints, one build $single")
+    } finally pool.shutdownNow()
+  }
+}
